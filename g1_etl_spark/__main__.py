@@ -4,9 +4,9 @@ mmj/server.py:6-11 POST /import/extract form params).
 
   python -m g1_etl_spark extract --dispensary 1 --org 420 \
       [--data DIR] [--out DIR] [--debug]
-      -> runs every entity pipeline, assembles the per-organization
-         import document, writes the reference-shaped mmj-{org}.json
-         (etl_import.py:59-64)
+      -> runs every entity pipeline as ONE Spark query, assembles the
+         per-organization import document, writes the reference-shaped
+         mmj-{org}.json (etl_import.py:59-64)
 
   python -m g1_etl_spark entity --entity members --dispensary 1 --org 420 \
       [--data DIR] [--out DIR]
@@ -14,9 +14,10 @@ mmj/server.py:6-11 POST /import/extract form params).
          partition) — the 100 TB path where a single driver-side
          document is not the product
 
---data points at a directory of {table}.parquet sources (FIXTURES.md §A
-schemas); absent tables become empty frames with the explicit schema, so
-the command runs end-to-end on partial fixtures.
+--data points at a directory of {table}.parquet sources, read with the
+schemas of entities/schemas.py (FIXTURES.md §A); absent tables become
+empty frames with the same schema, so the command runs end-to-end on
+partial fixtures.
 """
 
 from __future__ import annotations
@@ -27,23 +28,26 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
-from g1_etl_spark.entities import (employees as emp, members as mem,
-                                   menu_items as prod, physicians as phys,
-                                   settings as sett, vendors as vend)
 from g1_etl_spark.entities import schemas as S
-from g1_etl_spark.entities.assemble import build_payload, write_payload_json
+from g1_etl_spark.entities.assemble import (ENTITY_BUILDERS, build_payload,
+                                            write_payload_json)
 from g1_etl_spark.sources.sinks import write_entity_json
 
 
 def load_sources(spark: SparkSession, data_dir: str | None
                  ) -> dict[str, DataFrame]:
-    """Each mmj source table: parquet when present, else an empty frame
-    with the explicit schema (the input contract, schemas.py)."""
+    """Each mmj source table, read with its schema from schemas.py (the
+    input contract): parquet when present, else an empty frame.
+
+    Reading with the declared schema launches no footer/schema-inference
+    job, so building the sources costs no Spark job per request. A file
+    column of an incompatible type fails at read; a contract column
+    missing from the file reads as NULL."""
     out = {}
     for name, schema in S.ALL_SCHEMAS.items():
         path = os.path.join(data_dir, f"{name}.parquet") if data_dir else None
         if path and os.path.exists(path):
-            out[name] = spark.read.parquet(path)
+            out[name] = spark.read.schema(schema).parquet(path)
         else:
             out[name] = spark.createDataFrame([], schema)
     return out
@@ -52,33 +56,12 @@ def load_sources(spark: SparkSession, data_dir: str | None
 def entity_frame(sources: dict[str, DataFrame], entity: str,
                  dispensary_id: int, organization_id,
                  debug: bool = False) -> DataFrame:
-    """One entity pipeline -> (_id, doc) frame (reference extract()
-    call shapes, etl_import.py:10-16)."""
-    builders = {
-        "members": lambda: mem.transform(
-            sources["customers"], dispensary_id, organization_id),
-        "employees": lambda: emp.transform(
-            sources["users"], sources["dispensary_users"], dispensary_id,
-            organization_id, fake_email=True, debug=debug),
-        "products": lambda: prod.transform(
-            sources["menu_items"], sources["categories"],
-            sources["menu_item_prices"],
-            sources["menu_item_weedmaps_integrations"],
-            sources["dispensary_details"], dispensary_id, organization_id,
-            debug=debug),
-        "vendors": lambda: vend.transform(
-            sources["vendors"], dispensary_id, organization_id),
-        "physicians": lambda: phys.transform(
-            sources["physicians"], dispensary_id, organization_id),
-        "settings": lambda: sett.transform(
-            sources["dispensary_details"], sources["memberships"],
-            sources["membership_prices"], sources["red_flags"],
-            sources["taxes"], dispensary_id, organization_id, debug=debug),
-    }
-    if entity not in builders:
+    """One entity pipeline -> (_id, doc) frame (assemble.ENTITY_BUILDERS)."""
+    if entity not in ENTITY_BUILDERS:
         raise SystemExit(f"unknown entity {entity!r}; "
-                         f"choose from {sorted(builders)}")
-    return builders[entity]()
+                         f"choose from {sorted(ENTITY_BUILDERS)}")
+    return ENTITY_BUILDERS[entity](sources, dispensary_id, organization_id,
+                                   debug)
 
 
 def main(argv: list[str] | None = None) -> str:

@@ -15,13 +15,18 @@ the code wins, SURVEY §5):
   address[], expiryDate?, identificationType, createdAt, updatedAt,
   keys{...truthiness-pruned...}
 
-r12: the doc expression is assembled as ONE SQL string at import time
+The doc expression is assembled as ONE SQL string at import time
 (functions/sql_text — the builders are 1:1 twins of the Column helpers
 they replace) and applied with a single ``selectExpr`` call: the
 hundreds of py4j round-trips the Column form paid per invocation were
-~40% of entity_org_payload_json's driver time (guide §1.2 — fix the
-per-query work). Results are bit-identical (same Catalyst expressions;
-certified by goldens + oracle parity + the payload roundtrip contract).
+~40% of entity_org_payload_json's driver time. Results are bit-identical
+(same Catalyst expressions; certified by goldens + oracle parity + the
+payload roundtrip contract).
+
+In an org extract this frame is one branch of the single payload query
+(assemble.build_payload: six entity frames, one union, one collect), and
+`customers` arrives read with its schemas.py contract schema, so the
+per-request cost is plan construction, not Spark jobs.
 """
 
 from __future__ import annotations

@@ -18,13 +18,15 @@ Fidelity (SURVEY §7.4):
   - weightPricing: the reference overwrites per price row, so the LAST
     row in natural MySQL order wins for EVERY item; stand-in ordering =
     MAX(id) (documented divergence: natural order ~ insertion id).
+  - restockLevel: the reference takes the FIRST dispensary_details row
+    in natural order; stand-in ordering = MIN(id).
   - active = (on_hold == 1) cloned as-is (:210-216, suspect inverted).
   - inactive-item purge: the reference's remove-while-iterating skips
     elements (:196-199); we implement the intent (keep active only).
   - medicine_amount leaks into the reference output (never deleted);
     cloned for parity.
 
-r12: the doc projection is assembled as a SQL string + one selectExpr
+The doc projection is assembled as a SQL string + one selectExpr
 (joins unchanged) — see members.py for rationale and the equivalence
 contract.
 """
@@ -111,9 +113,14 @@ def transform(menu_items: DataFrame, categories: DataFrame,
           .distinct()
           .withColumn("_wm", F.lit(True)))
 
+    # restock levels from the FIRST dispensary_details row in natural
+    # order (etl.lookup(...)[id][0], :229-234); stand-in ordering = MIN(id)
     dd = (dispensary_details
-          .select("dispensary_id", "grams_hold_at", "units_hold_at")
-          .dropDuplicates(["dispensary_id"]))
+          .filter(F.col("dispensary_id") == dispensary_id)
+          .groupBy("dispensary_id")
+          .agg(F.min_by(F.struct("grams_hold_at", "units_hold_at"),
+                        F.col("id")).alias("_d"))
+          .select("dispensary_id", "_d.*"))
 
     # per-dispensary winning price row: last in natural order ~ MAX(id)
     price_win = (menu_item_prices

@@ -20,15 +20,15 @@ medicalLimits?}, sales{enableTaxesIn, hasPriceRounding},
 inventory{weightPricing{name, defaultTier, breakpoints{7 cent prices}}}?},
 sales_settings_taxes{taxes?}.
 
-r12: the one-row doc projection is assembled as a SQL string (built in
+The one-row doc projection is assembled as a SQL string (built in
 Python, parsed once by the JVM) instead of ~300 py4j Column calls per
-invocation; the winner-row joins/windows stay in the Column API. See
+invocation; the winner-row joins/aggregates stay in the Column API. See
 members.py for the rationale and the equivalence contract.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from g1_etl_spark.functions import sql_text as sx
@@ -132,12 +132,13 @@ def transform(dispensary_details: DataFrame, memberships: DataFrame,
               membership_prices: DataFrame, red_flags: DataFrame,
               taxes: DataFrame, dispensary_id: int, organization_id,
               debug: bool = False) -> DataFrame:
-    dd = dispensary_details.filter(F.col("dispensary_id") == dispensary_id)
-
-    # last dispensary_details row wins (dict.update fold); the single-row
-    # unpartitioned window is safe — there is one row per dispensary
-    dd = (dd.withColumn("_rn", F.row_number().over(W.orderBy(F.desc("id"))))
-          .filter(F.col("_rn") == 1).drop("_rn"))
+    # last dispensary_details row wins (dict.update fold): MAX(id)
+    dd = (dispensary_details
+          .filter(F.col("dispensary_id") == dispensary_id)
+          .groupBy("dispensary_id")
+          .agg(F.max_by(F.struct(*dispensary_details.columns), F.col("id"))
+               .alias("_d"))
+          .select("_d.*"))
 
     # winner tax row per dispensary (deterministic stand-in ordering)
     tax_win = (taxes.filter(F.col("dispensary_id") == dispensary_id)

@@ -22,9 +22,18 @@ contracts. Any new builder must keep its twin's docstring reference.
 from __future__ import annotations
 
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss"
-# SQL string literal for the format — double-quoted so the embedded
-# single quotes need no escaping
-_ISO_SQL = '"yyyy-MM-dd\'T\'HH:mm:ss"'
+
+
+def sql_string(value) -> str:
+    """`value` as a single-quoted SQL string literal: backslashes and
+    quotes escaped, so no value can end the literal early."""
+    s = str(value).replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{s}'"
+
+
+# single-quoted: a double-quoted literal is an identifier under
+# spark.sql.ansi.doubleQuotedIdentifiers
+_ISO_SQL = sql_string(ISO_FMT)
 
 _FALSY_IN = "('', '0', '0.0', 'false', 'False')"
 
@@ -228,8 +237,9 @@ def vendor_account_status(confirmed: str) -> str:
 
 
 def organization_id_lit(organization_id) -> str:
-    """scalars.organization_id_lit (C25)."""
-    return f"'{organization_id}'"
+    """scalars.organization_id_lit (C25); the id is request-supplied, so
+    it is escaped."""
+    return sql_string(organization_id)
 
 
 def account_status_notes(locked_visits_reason: str) -> str:

@@ -370,3 +370,141 @@ def test_payload_assembly(spark):
     assert payload["products"] == [] and payload["vendors"] == []
     assert payload["settings"] == {}
     assert payload["summary"]["members"] == {"valid": 0, "invalid": 0}
+
+
+# ------------------------------------------------------- org payload query
+def org_fixture(spark) -> dict:
+    """All 14 mmj tables for dispensary 1, plus dispensary-9 decoy rows:
+    several docs per payload list, ids out of order, and two
+    dispensary_details rows."""
+    rows = {
+        "customers": [
+            _row("customers", id=i, dispensary_id=d, name=f"Member {i}",
+                 license_type=1 + i % 2, dob=DOB if i % 2 else None,
+                 card_expires_at=EXP if i % 3 else None,
+                 created_at=TS1, updated_at=TS2)
+            for i, d in ((5, 1), (2, 1), (9, 1), (4, 9))],
+        "users": [
+            _row("users", id=i, email=f"u{i}@x.org", first_name=f"F{i}",
+                 last_name="L", login=f"u{i}", organization_id=420,
+                 created_at=TS1, updated_at=TS2)
+            for i in (12, 10, 11, 99)],
+        "dispensary_users": [
+            _row("dispensary_users", user_id=u, dispensary_id=d, active=1,
+                 access=a)
+            for u, d, a in ((12, 1, 3), (10, 1, 1), (11, 1, 4), (10, 1, 2),
+                            (99, 9, 1))],
+        "vendors": [
+            _row("vendors", id=i, dispensary_id=d, name=f"Vendor {i}",
+                 confirmed=i % 2, email=f"v{i}@x.org", liscense_no="L",
+                 website="http://v.org", address="1 Way", city="C",
+                 state="MN", zip_code="55812")
+            for i, d in ((3, 1), (1, 1), (2, 9))],
+        "physicians": [
+            _row("physicians", id=i, dispensary_id=d, name=f"Dr. P{i}",
+                 created_at=TS1, updated_at=TS2, phone_number="218555")
+            for i, d in ((8, 1), (6, 1), (7, 9))],
+        "menu_items": [
+            _row("menu_items", id=i, vendor_id=4, menu_id=1, dispensary_id=d,
+                 category_id=c, name=f"Item {i}", sativa=90, indica=5,
+                 on_hold=h, product_type=t, created_at=TS1, updated_at=TS2,
+                 medicine_amount=2.5)
+            for i, d, c, h, t in ((30, 1, 100, 1, 1), (10, 1, 101, 1, 2),
+                                  (20, 1, 100, 1, 2), (40, 1, 100, 0, 1),
+                                  (50, 9, 100, 1, 1))],
+        "categories": [
+            _row("categories", id=100, name="Cannabis", measurement=2),
+            _row("categories", id=101, name="Edibles", measurement=1)],
+        "menu_item_prices": [
+            _row("menu_item_prices", id=i, menu_item_id=m, dispensary_id=d,
+                 price_half_gram=p, price_gram=p, price_two_gram=p,
+                 price_eigth=p, price_quarter=p, price_half=p,
+                 price_ounce=p)
+            for i, m, d, p in ((1, 30, 1, 1.0), (2, 10, 1, 2.0),
+                               (3, 50, 9, 3.0))],
+        "menu_item_weedmaps_integrations": [
+            _row("menu_item_weedmaps_integrations", menu_item_id=m)
+            for m in (30, 30, 50)],
+        # two rows for dispensary 1, the higher id first
+        "dispensary_details": [
+            _row("dispensary_details", id=i, dispensary_id=d,
+                 inactivity_logout=t, pp_enabled=1, red_flags_enabled=1,
+                 mmjrevu_api_key="K", logo_file_name="l.png",
+                 grams_hold_at=g, units_hold_at=u)
+            for i, d, t, g, u in ((8, 1, 60, 9.0, 4.0),
+                                  (7, 1, 45, 5.5, 3.0),
+                                  (6, 9, 30, 1.0, 1.0))],
+        "memberships": [_row("memberships", id=1, dispensary_id=1),
+                        _row("memberships", id=2, dispensary_id=9)],
+        "membership_prices": [
+            _row("membership_prices", id=i, membership_id=m, price_gram=p,
+                 price_half_gram=p)
+            for i, m, p in ((2, 1, 9.0), (1, 1, 10.0), (3, 2, 1.0))],
+        "red_flags": [_row("red_flags", dispensary_id=1,
+                           daily_purchase_limit=28.0,
+                           two_week_purchase_limit=56.0)],
+        "taxes": [_row("taxes", dispensary_id=1, amount=8.5, name="state"),
+                  _row("taxes", dispensary_id=1, amount=2.0, name="city")],
+    }
+    return {name: _df(spark, name, rows[name]) for name in S.ALL_SCHEMAS}
+
+
+def test_payload_matches_per_entity_sorted_collects(spark):
+    """The one-query payload equals the six per-entity collects ordered by
+    _id in Spark, order included."""
+    from g1_etl_spark.entities import (employees as emp, members as mem,
+                                       menu_items as prod, physicians as phys,
+                                       settings as sett, vendors as vend)
+    from g1_etl_spark.entities.assemble import build_payload
+
+    s = org_fixture(spark)
+    payload = build_payload(s, 1, 420, extracted_date=1700000000)
+    expected = {
+        "employees": emp.transform(s["users"], s["dispensary_users"], 1,
+                                   420, fake_email=True),
+        "members": mem.transform(s["customers"], 1, 420),
+        "products": prod.transform(
+            s["menu_items"], s["categories"], s["menu_item_prices"],
+            s["menu_item_weedmaps_integrations"], s["dispensary_details"],
+            1, 420),
+        "vendors": vend.transform(s["vendors"], 1, 420),
+        "physicians": phys.transform(s["physicians"], 1, 420),
+    }
+    for entity, df in expected.items():
+        want = docs(df.orderBy("_id"))
+        assert len(want) > 1, entity
+        assert payload[entity] == want, entity
+    settings = docs(sett.transform(
+        s["dispensary_details"], s["memberships"], s["membership_prices"],
+        s["red_flags"], s["taxes"], 1, 420).orderBy("_id"))
+    assert payload["settings"] == settings[0]
+    # the last dispensary_details row wins: MAX(id)
+    assert payload["settings"]["keys"]["id"] == 8
+    assert payload["settings"]["sessionTimeoutDuration"] == 60
+    assert [m["keys"]["id"] for m in payload["members"]] == [2, 5, 9]
+
+
+def test_products_restock_from_first_details_row(spark):
+    """Two dispensary_details rows: restockLevel comes from the first in
+    natural order (MIN(id) stand-in), whatever order the rows arrive in."""
+    from g1_etl_spark.entities.menu_items import transform
+
+    s = org_fixture(spark)
+    out = {d["name"]: d["restockLevel"] for d in docs(transform(
+        s["menu_items"], s["categories"], s["menu_item_prices"],
+        s["menu_item_weedmaps_integrations"], s["dispensary_details"], 1,
+        420))}
+    # id 7 wins over id 8: grams_hold_at 5.5 (type 1), units_hold_at 3.0
+    assert out == {"Item 30": 5.5, "Item 10": 3.0, "Item 20": 3.0}
+
+
+@pytest.mark.parametrize("org", ["4'20", "4\\'20", "x' OR '1'='1"])
+def test_settings_org_id_escaped(spark, org):
+    """A request-supplied org id with quotes/backslashes round-trips into
+    settings.organizationId instead of breaking the doc SQL."""
+    from g1_etl_spark.entities.assemble import build_payload
+
+    payload = build_payload(org_fixture(spark), 1, org,
+                            extracted_date=1700000000)
+    assert payload["organizationId"] == org
+    assert payload["settings"]["organizationId"] == org
